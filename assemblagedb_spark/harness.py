@@ -429,16 +429,12 @@ def _graph_edges(spark: SparkSession, sf_dir: str, include_lineitem: bool) -> Da
 def q_graph_descendants(spark: SparkSession, sf_dir: str) -> DataFrame:
     """descendants(R0): BFS transitive closure with depth (lib.rs:695-797).
     The FK hierarchy has known depth 3 (region→nation→customer/supplier→
-    orders), so the loop is bounded instead of probing an empty frontier."""
+    orders), so max_depth=3 covers the whole closure."""
     e = _graph_edges(spark, sf_dir, include_lineitem=False)
     roots = spark.createDataFrame([("R0",)], "node_id string")
     # the FK hierarchy is a leveled forest (every node one parent, one path)
     # — the visited anti-join and per-level distinct would be dead weight
-    return descendants(
-        e, roots, max_depth=3, assume_forest=True, broadcast_frontier=True
-    ).select(
-        "node_id", F.col("depth").cast("long")
-    )
+    return descendants(e, roots, max_depth=3, assume_forest=True)
 
 
 O_GRAPH_DESCENDANTS = f"""
@@ -5156,8 +5152,6 @@ def q_graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
     gate does not depend on the generated graph happening to have no
     depth-3 node (the C→O→L/P→L graph is 2-deep today, but a data-gen
     change must not silently unbalance the two sides)."""
-    from assemblagedb_spark.operators.components import bfs_depth
-
     e = _shared_graph_edges(spark, sf_dir)
     li = load_table(spark, sf_dir, "lineitem")
     seeds = (
@@ -5174,7 +5168,7 @@ def q_graph_bfs_depth(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
     )
-    return bfs_depth(e, seeds, max_depth=2)
+    return descendants(e, seeds, max_depth=2)
 
 
 O_GRAPH_BFS_DEPTH = f"""

@@ -28,7 +28,6 @@ def label_propagation_components(
     edges: DataFrame,
     *,
     rounds: int | None,
-    directed: bool = False,
     max_rounds: int = 200,
     probe_from: int = 2,
     copartition: bool = True,
@@ -41,15 +40,13 @@ def label_propagation_components(
     no label changes (exact components on any graph; stops after diameter+1
     rounds, capped at ``max_rounds``).
 
-    ``edges``: (parent_id, child_id); treated as undirected unless
-    ``directed`` (components of the underlying undirected graph is the
-    standard CC semantics). With ``directed=True`` labels only flow
-    edge-forward; nodes appearing solely as dst still get a label row.
+    ``edges``: (parent_id, child_id), treated as undirected (components
+    of the underlying undirected graph is the standard CC semantics).
     """
     fwd = edges.select(
         F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
     )
-    und = fwd if directed else fwd.unionByName(
+    und = fwd.unionByName(
         fwd.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
     # ``copartition``: hash-partition on src before caching — the
@@ -65,16 +62,15 @@ def label_propagation_components(
         parts = edges.sparkSession.sparkContext.defaultParallelism
         und = und.repartition(parts, "src")
     und = und.persist()
-    node_ids = und.select(F.col("src").alias("node_id"))
-    if directed:
-        # sink nodes appear only as dst — they still need label rows
-        node_ids = node_ids.unionByName(und.select(F.col("dst").alias("node_id")))
-    labels = node_ids.distinct().withColumn("component", F.col("node_id"))
+    labels = (
+        und.select(F.col("src").alias("node_id"))
+        .distinct()
+        .withColumn("component", F.col("node_id"))
+    )
     probe = rounds is None
     n_rounds = max_rounds if probe else rounds
     for r in range(n_rounds):
-        # labels flow src -> dst (edge-forward); for the symmetrized
-        # undirected relation this is identical to the reverse orientation
+        # labels flow src -> dst over the symmetrized relation
         neigh = (
             und.join(
                 labels.select(
@@ -228,8 +224,8 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     precisely by the graph's arboricity-class bound), so hub nodes
     stop dominating — the previous id-ordered orientation left a hub's
     full degree on the out side and cost Σ deg(v)² (the sf1-class
-    scaling leg measured that blow-up at 559s full compute;
-    SCALING_R10.md holds the after numbers). The triangle SET is
+    scaling leg measured that blow-up at 559s full compute). The
+    triangle SET is
     orientation-independent, so the result — and the oracle — are
     unchanged; the extra work is one degree aggregate + two joins to
     attach degrees before orienting, below the pinned edge relation.
@@ -286,98 +282,6 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     return nodes.join(per_node, "node_id", "left").select(
         "node_id",
         F.coalesce("n_triangles", F.lit(0)).cast("long").alias("n_triangles"),
-    )
-
-
-def star_components(
-    edges: DataFrame,
-    *,
-    max_rounds: int = 50,
-) -> DataFrame:
-    """Connected components via alternating large-star / small-star rounds
-    (Kiveris et al., "Connected Components in MapReduce and Beyond",
-    SoCC'14): converges in O(log^2 n) rounds REGARDLESS of diameter, where
-    min-label propagation needs diameter rounds — a path graph of length
-    10^6 takes ~20 star rounds vs 10^6 propagation rounds.
-
-    - large-star: every node u links each strictly-larger neighbor to the
-      minimum of its closed neighborhood m(u);
-    - small-star: every node u re-links its ≤-neighbors (its parents in
-      the forming forest) to m over that subset.
-
-    Both are ONE groupBy + generate per round over the current edge set;
-    the edge set only shrinks toward the final star forest (one hub = the
-    component's min node). Output: (node_id, component), identical to
-    :func:`label_propagation_components`'s converged labels.
-    """
-    # symmetrize, drop self-loops, orient as unordered pairs
-    fwd = edges.select(
-        F.col("parent_id").alias("u"), F.col("child_id").alias("v")
-    )
-    sym = fwd.unionByName(
-        fwd.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    e = (
-        sym.filter(F.col("u") != F.col("v"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    # node universe comes from the PRE-self-loop-filter edge set: a node
-    # whose only edges are self-loops still gets a (node, node) output row,
-    # matching label_propagation_components' converged labels
-    all_nodes = sym.select(F.col("u").alias("node_id")).distinct().localCheckpoint(
-        eager=True
-    )
-
-    def _star(cur: DataFrame, large: bool) -> DataFrame:
-        # group the symmetric neighbor lists once per round
-        neigh = cur.groupBy("u").agg(
-            F.min("v").alias("mn"), F.collect_set("v").alias("nbrs")
-        )
-        m = F.least("u", "mn")
-        # large-star re-links the strictly-larger neighbors; small-star
-        # re-links the ≤-neighbors AND u itself (dropping u here loses the
-        # u—m edge and disconnects the forming star)
-        side = (
-            F.expr("filter(nbrs, x -> x > u)")
-            if large
-            else F.expr("array_union(filter(nbrs, x -> x <= u), array(u))")
-        )
-        out = (
-            neigh.select(m.alias("m"), F.explode(side).alias("v"))
-            .select(F.col("v").alias("u"), F.col("m").alias("v"))
-            .filter(F.col("u") != F.col("v"))
-            .distinct()
-        )
-        # keep symmetry for the next grouping pass
-        return (
-            out.unionByName(
-                out.select(F.col("v").alias("u"), F.col("u").alias("v"))
-            )
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-
-    for _ in range(max_rounds):
-        nxt = _star(_star(e, large=True), large=False)
-        # fixed point: identical symmetric edge sets
-        if (
-            nxt.count() == e.count()
-            and nxt.exceptAll(e).limit(1).count() == 0
-        ):
-            e = nxt
-            break
-        e = nxt
-
-    # converged: each component is a star around its min node; a node's
-    # component is its min neighbor (or itself if it IS the hub / isolated)
-    comp = (
-        e.groupBy("u")
-        .agg(F.min("v").alias("mn"))
-        .select(F.col("u").alias("node_id"), F.least("u", "mn").alias("component"))
-    )
-    return all_nodes.join(comp, "node_id", "left").select(
-        "node_id", F.coalesce("component", "node_id").alias("component")
     )
 
 
@@ -610,89 +514,6 @@ def personalized_pagerank(
     return ranks.select("node_id", "rank")
 
 
-def bfs_depth(
-    edges: DataFrame,
-    seeds: DataFrame,
-    *,
-    max_depth: int,
-    broadcast_rows: int = 500_000,
-) -> DataFrame:
-    """Multi-source BFS: (node_id, depth) = fewest hops from ANY seed,
-    following edges parent→child, for every node within ``max_depth``.
-
-    The frontier loop is the traversal primitive behind reachability
-    closures (reference `descendants`, assemblage_db/src/lib.rs:695-797)
-    generalized to shortest-hop depth over a seed SET. Per round: one
-    frontier⋈edges equi-join + an anti-join against the settled set
-    (cycle-safe — a revisited node is never re-expanded, ``lib.rs:703-707``
-    visited-set analogue), so round r costs |frontier_r ⋈ E|, never |V|².
-    Seeds report depth 0; a node reachable at several depths reports the
-    minimum (BFS invariant: first visit is shallowest).
-
-    Join strategy is chosen from the loop's OWN runtime statistics: the
-    settled union is counted every round anyway (the convergence probe),
-    so the exact frontier and settled sizes are known before each join is
-    planned. While they fit a broadcast (``broadcast_rows``, ~tens of MB
-    of node ids), the frontier side of the expansion join and the settled
-    side of the anti-join are broadcast — the edge relation is never
-    shuffled for a small frontier. Past the bound the hints are simply
-    not attached and both joins fall back to shuffles: the hub-explosion
-    regime keeps the shuffle plan, a thin frontier (the common BFS tail)
-    never pays it. Identical output either way — the hints move bytes,
-    not semantics.
-    """
-    fwd = edges.select(
-        F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
-    )
-    from pyspark.sql import Observation
-
-    # the settled-count probe rides each checkpoint job via observe()
-    # (one job per round instead of checkpoint + count; see
-    # label_propagation_components for the retry-safety argument)
-    obs = Observation()
-    settled = (
-        seeds.select("node_id").distinct()
-        .withColumn("depth", F.lit(0).cast("long"))
-        .observe(obs, F.count(F.lit(1)).alias("n"))
-        .localCheckpoint(eager=True)
-    )
-    n_settled = obs.get["n"] or 0
-    frontier_n = n_settled
-    for d in range(1, max_depth + 1):
-        # one checkpoint per round: the settled∪frontier union is pinned
-        # and the next frontier is a cheap filter over its in-memory
-        # blocks (depth == d-1), so neither the frontier nor the union is
-        # ever recomputed from lineage
-        frontier = settled.filter(F.col("depth") == d - 1).select(
-            F.col("node_id").alias("src")
-        )
-        if frontier_n <= broadcast_rows:
-            frontier = F.broadcast(frontier)
-        anti = settled.select("node_id")
-        if n_settled <= broadcast_rows:
-            anti = F.broadcast(anti)
-        nxt = (
-            fwd.join(frontier, "src")
-            .select(F.col("dst").alias("node_id"))
-            .distinct()
-            .join(anti, "node_id", "left_anti")
-            .withColumn("depth", F.lit(d).cast("long"))
-        )
-        obs = Observation()
-        merged = (
-            settled.unionByName(nxt)
-            .observe(obs, F.count(F.lit(1)).alias("n"))
-            .localCheckpoint(eager=True)
-        )
-        n_new = obs.get["n"] or 0
-        if n_new == n_settled:
-            break
-        frontier_n = n_new - n_settled
-        n_settled = n_new
-        settled = merged
-    return settled
-
-
 def _symmetrized(edges: DataFrame) -> DataFrame:
     """Both orientations of (parent_id, child_id) in ONE input scan —
     explode emits the forward and reverse row per edge, so the map side
@@ -864,8 +685,7 @@ def k_core_delta(
     scale, where |E| >> |V|), the delta form does asymptotically less
     work; the gated query (`graph_kcore`) runs THIS formulation, with
     :func:`k_core` kept as the simpler reference both are parity-pinned
-    against (the same coexistence as label-prop vs
-    :func:`star_components`).
+    against.
 
     A node dies exactly once (new deaths are computed among the alive
     set only), so each edge to a dead endpoint is decremented exactly
@@ -904,7 +724,8 @@ def k_core_delta(
     each round's single probe aggregate, together with the frontier
     count — is an EXACT upper bound on the next round's candidate
     count: every broadcast is gated on it BEFORE the round is planned
-    (the same runtime-stats-guard pattern as :func:`bfs_depth`), and
+    (the same runtime-stats-guard pattern as
+    :func:`~assemblagedb_spark.operators.traversal.descendants`), and
     past ``broadcast_max_dead`` the loop simply consolidates with a
     rewrite round. Candidates already dead before a tail round are
     dropped from its pinned table: their accumulated decrements put

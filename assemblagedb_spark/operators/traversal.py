@@ -10,118 +10,113 @@ relation:
 - ``before``/``after`` (``core.rs:152-299``): nearest non-blank sibling per
   direction within the same parent.
 
-Scale design: BFS is a loop of hash joins on ``parent_id``; each iteration
-shuffles only the *frontier* (small after the first hops), the edges side
-stays partitioned by ``parent_id`` and is reused across iterations via
-``persist``. Cycle safety = anti-join against the accumulated visited set —
-the DataFrame equivalent of the reference's ``HashSet`` guard. Frontiers are
-``localCheckpoint``-ed every few rounds so the lineage (and thus the task
-binary) does not grow unboundedly — the standard iterative-algorithm pattern
-on Spark (GraphX does the same internally).
+Scale design: BFS is a loop of equi-joins on ``parent_id``, one level per
+iteration. Each level eagerly ``localCheckpoint``s the settled set together
+with the new level — ONE pin per level, so neither the frontier (a filter
+over the pinned blocks) nor the closure is ever re-derived from lineage, and
+the lineage never grows past one level. The level at ``max_depth`` is the
+exception: it is returned unpinned, for the caller's action to compute once.
+Cycle safety = anti-join against the settled set — the DataFrame equivalent
+of the reference's ``HashSet`` guard. The level's pin job also observes how
+many rows it settled, and the walk ends on the first level that settles none.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window, functions as F
+from pyspark.sql import DataFrame, Observation, Window, functions as F
+
+# the frontier side of the expansion join and the settled side of the
+# anti-join are broadcast while their exact row counts (observed by the
+# previous level's pin job) stay under this bound (~tens of MB of node
+# ids); past it both joins fall back to shuffles
+_BROADCAST_ROWS = 500_000
 
 
 def descendants(
     edges: DataFrame,
     roots: DataFrame,
     *,
-    max_depth: int | None = None,
-    checkpoint_every: int = 8,
+    max_depth: int,
     assume_forest: bool = False,
-    broadcast_frontier: bool = False,
 ) -> DataFrame:
-    """Transitive closure downward from ``roots`` (one column ``node_id``).
+    """Multi-source BFS downward from ``roots`` (one column ``node_id``).
 
-    Returns (node_id, depth) with depth = shortest hop distance from any
-    root (roots themselves at depth 0). Cycle-safe: a node already visited
-    at a smaller depth is never re-expanded.
+    Returns (node_id, depth) with depth = fewest parent→child hops from
+    ANY root (roots themselves at depth 0), for every node within
+    ``max_depth``. Cycle-safe: a node settled at a smaller depth is never
+    re-expanded (first visit is shallowest), so level d costs
+    |frontier_d ⋈ E|, never |V|².
 
     ``assume_forest``: caller guarantees every node is reachable along
     exactly one path (leveled FK hierarchies, trees) — the per-level
-    distinct and the visited anti-join are then provably no-ops and are
+    distinct and the settled anti-join are then provably no-ops and are
     skipped, leaving one join per level as the whole plan. This is the
     shape that matters at scale: for a leveled 100 TB graph the anti-join
-    against an ever-growing visited set would be the dominant shuffle.
+    against an ever-growing settled set would be the dominant shuffle.
 
-    ``broadcast_frontier``: caller guarantees every frontier stays small
-    (point lookups from a handful of roots) — hint each level's join to
-    broadcast the frontier so the edge relation is never shuffled, only
-    scanned. Without the hint Catalyst sort-merge-joins both sides because
-    the frontier's size estimate is unknown mid-iteration.
+    Join strategy comes from the loop's OWN runtime statistics: each
+    level's pin job observes the rows it settled, so the exact frontier
+    size and (up to retry over-count) the settled size are known before
+    the next level is planned. While under ``_BROADCAST_ROWS`` the
+    frontier and the anti-join side are broadcast, so the edge relation
+    is scanned, never shuffled, for a thin frontier. The hints move
+    bytes, not semantics.
+
+    Exit: the walk stops after ``max_depth`` levels or on the first level
+    that settles no row. Task retries can only over-count the observed
+    level size, which delays the exit by one no-op level (or picks the
+    shuffle plan) — never ends the walk early. The ``max_depth`` level is
+    returned as a lazy union over the pinned levels, one join deep.
 
     Side effect: the per-level ``localCheckpoint(eager=True)`` runs Spark
     jobs DURING DataFrame construction (calls are not lazy), and
     checkpointed blocks are not recomputable if an executor is lost. For
     very long walks on an unreliable cluster, swap in reliable
-    ``checkpoint()`` against a checkpoint dir (same call sites) — the lazy
-    alternative costs O(d²/2) re-derived joins.
+    ``checkpoint()`` against a checkpoint dir (same call site).
     """
-    if assume_forest and max_depth is not None:
-        # bounded forest walk: each level eagerly materialized
-        # (localCheckpoint) so level d is ONE probe of the edge relation;
-        # left lazy, the union's depth-d branch would re-derive joins 1..d
-        # (O(d²/2) edge scans for the whole walk)
-        e = edges.select("parent_id", "child_id")
-        frontier = roots.select("node_id").distinct()
-        out = frontier.withColumn("depth", F.lit(0))
-        for depth in range(1, max_depth + 1):
-            f = frontier.withColumnRenamed("node_id", "parent_id")
-            if broadcast_frontier:
-                f = F.broadcast(f)
-            frontier = (
-                e.join(f, "parent_id")
-                .select(F.col("child_id").alias("node_id"))
-                .localCheckpoint(eager=True)
-            )
-            out = out.unionByName(frontier.withColumn("depth", F.lit(depth)))
-        return out
-
     e = edges.select("parent_id", "child_id")
-    if not broadcast_frontier:
-        # big-frontier regime: each level sort-merge-joins on parent_id,
-        # so co-partition the edge cache once — an InMemoryRelation keeps
-        # its outputPartitioning, leaving only the frontier side to
-        # shuffle per level (with a broadcast frontier the edge side is
-        # never shuffled, so the upfront exchange would be pure cost)
-        parts = edges.sparkSession.sparkContext.defaultParallelism
-        e = e.repartition(parts, "parent_id")
-    e = e.persist()
-    visited = roots.select("node_id").distinct().withColumn("depth", F.lit(0))
-    frontier = visited
-    depth = 0
-    persisted = []
-    while True:
-        if max_depth is not None and depth >= max_depth:
+    obs = Observation()
+    settled = (
+        roots.select("node_id").distinct()
+        .withColumn("depth", F.lit(0).cast("long"))
+        .observe(obs, F.count(F.lit(1)).alias("n"))
+        .localCheckpoint(eager=True)
+    )
+    n_level = n_settled = obs.get["n"] or 0
+    for d in range(1, max_depth + 1):
+        if n_level == 0:
             break
-        f = frontier.withColumnRenamed("node_id", "parent_id").select("parent_id")
-        if broadcast_frontier:
-            f = F.broadcast(f)
-        nxt = e.join(f, "parent_id").select(F.col("child_id").alias("node_id"))
+        frontier = settled.filter(F.col("depth") == d - 1).select(
+            F.col("node_id").alias("parent_id")
+        )
+        if n_level <= _BROADCAST_ROWS:
+            frontier = F.broadcast(frontier)
+        nxt = e.join(frontier, "parent_id").select(
+            F.col("child_id").alias("node_id")
+        )
         if not assume_forest:
-            nxt = nxt.distinct().join(visited.select("node_id"), "node_id", "left_anti")
-        nxt = nxt.withColumn("depth", F.lit(depth + 1))
-        if (depth + 1) % checkpoint_every == 0:
-            nxt = nxt.localCheckpoint(eager=True)  # truncate lineage
-        else:
-            nxt = nxt.persist()
-            persisted.append(nxt)
-        # with a known depth bound the loop is exact — skip the per-level
-        # empty-frontier probe (each probe is a full Spark job)
-        if max_depth is None and nxt.isEmpty():
-            break
-        visited = visited.unionByName(nxt)
-        frontier = nxt
-        depth += 1
-    # materialize the closure before releasing the per-level caches
-    out = visited.localCheckpoint(eager=True)
-    e.unpersist()
-    for df in persisted:
-        df.unpersist()
-    return out
+            anti = settled.select("node_id")
+            if n_settled <= _BROADCAST_ROWS:
+                anti = F.broadcast(anti)
+            nxt = nxt.distinct().join(anti, "node_id", "left_anti")
+        merged = settled.unionByName(
+            nxt.withColumn("depth", F.lit(d).cast("long"))
+        )
+        if d == max_depth:
+            # no exit test follows the last level and the caller's action
+            # computes it once: pinning it would only add a job that
+            # re-copies every settled block
+            return merged
+        obs = Observation()
+        settled = (
+            merged.observe(
+                obs, F.sum((F.col("depth") == d).cast("long")).alias("n")
+            )
+            .localCheckpoint(eager=True)
+        )
+        n_level = obs.get["n"] or 0
+        n_settled += n_level
+    return settled
 
 
 def ancestors(
@@ -192,7 +187,8 @@ def ancestors(
         # big-frontier regime: every level joins parent_of on child_id
         # (ProjectExec is alias-aware, so the current_id rename keeps the
         # partitioning) — co-partition the cache once instead of
-        # re-shuffling it per level (see descendants)
+        # re-shuffling it per level (an InMemoryRelation keeps its
+        # outputPartitioning, leaving only the frontier side to shuffle)
         parts = edges.sparkSession.sparkContext.defaultParallelism
         parent_of = parent_of.repartition(parts, "child_id")
     parent_of = parent_of.persist()
@@ -300,7 +296,7 @@ def subtree_closure(
 
     e = edges.select("parent_id", "child_id", *(["idx"] if with_path else []))
     if not broadcast_frontier:
-        # co-partition the per-level join key once (see descendants)
+        # co-partition the per-level join key once (see ancestors)
         parts = edges.sparkSession.sparkContext.defaultParallelism
         e = e.repartition(parts, "parent_id")
     e = e.persist()
@@ -728,9 +724,10 @@ def descendants_until_links(
     block-inside-span boundaries. ``edges`` carries a boolean ``link_col``
     per edge.
 
-    Same bounded-walk shape as :func:`descendants` (forest assumption, one
-    probe of the edge relation per level, frontiers eagerly materialized);
-    the only difference is the frontier filter ``NOT is_link``.
+    Bounded forest walk: one probe of the edge relation per level,
+    frontiers eagerly materialized (left lazy, the union's depth-d branch
+    would re-derive joins 1..d); a child reached through a link is kept
+    but filtered out of the next frontier (``NOT is_link``).
     """
     e = edges.select("parent_id", "child_id", F.col(link_col).alias("__link"))
     frontier = roots.select("node_id").distinct()

@@ -17,6 +17,11 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+# where main() also writes the full payload line (tests point it elsewhere)
+BENCH_LOCAL_PATH = os.path.join(
+    os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json"
+)
+
 BENCH_QUERIES = [
     "search",
     "find_symmetric",
@@ -341,11 +346,7 @@ def main() -> None:
     # depends on a truncated artifact (BENCH_LOCAL.json is committed each
     # round; see ROTATION.md round-4 plan)
     try:
-        with open(
-            os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                         "BENCH_LOCAL.json"),
-            "w",
-        ) as fh:
+        with open(BENCH_LOCAL_PATH, "w") as fh:
             fh.write(payload + "\n")
     except OSError:
         pass

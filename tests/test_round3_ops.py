@@ -49,7 +49,7 @@ def test_best_per_group_total_order(spark):
 
 
 def test_bfs_depth_min_hop_and_early_exit(spark):
-    from assemblagedb_spark.operators.components import bfs_depth
+    from assemblagedb_spark.operators.traversal import descendants as bfs_depth
 
     #    1 -> 2 -> 3 -> 4         seed {1, 3}: 3 is depth 0, not 2
     #    plus a cycle 5 <-> 6 reachable from 1 (cycle-safe revisit guard)
@@ -393,22 +393,76 @@ def test_candidate_verify_equals_allpairs_restricted(spark):
         assert r["containment_b"] == inter / nb
 
 
-def test_bfs_depth_broadcast_guard_parity(spark):
+def _py_bfs(edges, seeds, max_depth):
+    """Plain-Python multi-source BFS: node -> fewest hops from any seed."""
+    children = {}
+    for p, c in edges:
+        children.setdefault(p, []).append(c)
+    depth = {s: 0 for s in seeds}
+    frontier = sorted(depth)
+    for d in range(1, max_depth + 1):
+        nxt = []
+        for p in frontier:
+            for c in children.get(p, ()):
+                if c not in depth:
+                    depth[c] = d
+                    nxt.append(c)
+        frontier = nxt
+    return depth
+
+
+def test_bfs_depth_broadcast_guard_parity(spark, monkeypatch):
     # round-9 optimization pin: the frontier/settled broadcast hints are
     # a join-strategy choice driven by the loop's own runtime counts —
-    # disabling them (broadcast_rows=0) must yield the identical depth
+    # disabling them (_BROADCAST_ROWS=0) must yield the identical depth
     # map on a graph whose frontier is revisited across rounds
-    from assemblagedb_spark.operators.components import bfs_depth
+    import random
 
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (1, 5), (5, 6), (6, 5), (4, 1)],
-        "parent_id long, child_id long",
-    )
-    seeds = spark.createDataFrame([(1,), (3,)], "node_id long")
-    with_bcast = {(r["node_id"], r["depth"])
-                  for r in bfs_depth(e, seeds, max_depth=10).collect()}
-    no_bcast = {(r["node_id"], r["depth"])
-                for r in bfs_depth(
-                    e, seeds, max_depth=10, broadcast_rows=0).collect()}
+    from assemblagedb_spark.operators import traversal
+    from assemblagedb_spark.operators.traversal import descendants as bfs_depth
+
+    def run(rows, seeds, **kw):
+        # a sorted row list, not a set: a node settled twice must show
+        e = spark.createDataFrame(rows, "parent_id long, child_id long")
+        s = spark.createDataFrame([(x,) for x in seeds], "node_id long")
+        return sorted((r["node_id"], r["depth"])
+                      for r in bfs_depth(e, s, **kw).collect())
+
+    def both_plans(rows, seeds, **kw):
+        # default broadcast guard, then the forced-shuffle leg
+        with_bcast = run(rows, seeds, **kw)
+        with monkeypatch.context() as m:
+            m.setattr(traversal, "_BROADCAST_ROWS", 0)
+            no_bcast = run(rows, seeds, **kw)
+        return with_bcast, no_bcast
+
+    fixed = [(1, 2), (2, 3), (3, 4), (1, 5), (5, 6), (6, 5), (4, 1)]
+    with_bcast, no_bcast = both_plans(fixed, [1, 3], max_depth=10)
     assert with_bcast == no_bcast
     assert dict(with_bcast) == {1: 0, 3: 0, 2: 1, 5: 1, 4: 1, 6: 2}
+
+    # seeded random digraphs: multi-parent nodes, cycles, self-loops and
+    # duplicate edges, checked against a plain-Python BFS — both with a
+    # depth bound past the graph's reach (the empty-level exit ends the
+    # walk) and a truncating one
+    for seed in (11, 12, 13):
+        rng = random.Random(seed)
+        n = 40
+        rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(70)]
+        seeds = rng.sample(range(n), 3)
+        for max_depth in (50, 2):
+            want = sorted(_py_bfs(rows, seeds, max_depth).items())
+            with_bcast, no_bcast = both_plans(rows, seeds, max_depth=max_depth)
+            assert with_bcast == no_bcast == want, (seed, max_depth)
+
+    # seeded random forest: every node has one parent, so the forest path
+    # (no per-level distinct, no anti-join) must give the same closure
+    rng = random.Random(21)
+    forest = [(rng.randrange(i), i) for i in range(3, 60)]
+    for max_depth in (50, 3):
+        want = sorted(_py_bfs(forest, [0, 1, 2], max_depth).items())
+        got = run(forest, [0, 1, 2], max_depth=max_depth, assume_forest=True)
+        assert got == want, max_depth
+
+    # no roots: nothing settles, the walk ends before its first level
+    assert run(fixed, [], max_depth=10) == []

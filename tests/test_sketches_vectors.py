@@ -393,41 +393,15 @@ def test_bloom_no_false_negatives_and_prefilter_exact(spark):
     assert refined == exact
 
 
-# ---------------------------------------------------------------------------
-# large-star/small-star components (log-round convergence)
-# ---------------------------------------------------------------------------
-
-def test_star_components_long_chain_and_parity(spark):
-    from assemblagedb_spark.operators.components import (
-        label_propagation_components,
-        star_components,
-    )
-
-    # chain longer than any reasonable fixed round budget + triangle + pair
-    # + a node whose ONLY edge is a self-loop (must still get a label row,
-    # matching label propagation)
-    rows = ([(i, i + 1) for i in range(80)]
-            + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
-    e = spark.createDataFrame(rows, "parent_id long, child_id long")
-    star = sorted((r["node_id"], r["component"])
-                  for r in star_components(e).collect())
-    prop = sorted((r["node_id"], r["component"])
-                  for r in label_propagation_components(
-                      e, rounds=None, max_rounds=200).collect())
-    assert star == prop
-    assert {c for _, c in star} == {0, 500, 900, 950}
-    assert (950, 950) in star
-
-
 def test_contracted_components_parity(spark):
     from assemblagedb_spark.operators.components import (
         contracted_components,
         label_propagation_components,
     )
 
-    # chain + triangle + pair + self-loop-only node, same fixture the star
-    # parity uses; repartition(16) scatters the chain so the finisher, not
-    # just the contraction, is exercised
+    # chain + triangle + pair + a node whose ONLY edge is a self-loop (it
+    # must still get a label row); repartition(16) scatters the chain so
+    # the finisher, not just the contraction, is exercised
     rows = ([(i, i + 1) for i in range(80)]
             + [(500, 501), (501, 502), (502, 500), (900, 901), (950, 950)])
     e = spark.createDataFrame(rows, "parent_id long, child_id long")

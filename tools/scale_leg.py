@@ -12,8 +12,8 @@ fixed at session creation):
 Timing discipline mirrors bench.py (same cold-key cache resets, min-of-2,
 count() action) plus a noop-sink column (guide §1.4) because two of the
 targeted keys (graph_triangles, table_profile) hide most of their compute
-from count(). Output: one JSON line per run; SCALING_R10.md in the repo
-root holds the committed 8c/32c comparison.
+from count(). Output: one JSON line per run; compare the legs of two core
+counts side by side.
 """
 
 from __future__ import annotations
