@@ -3032,7 +3032,7 @@ def q_graph_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     e = _cyclic_graph_edges(spark, sf_dir)
-    return label_propagation_components(e, rounds=None)
+    return label_propagation_components(e)
 
 
 def _o_components(rounds: int) -> str:
@@ -3146,7 +3146,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
     restart to seeds): 'which suppliers/nations does a walk from THESE
     hubs keep reaching' — integer fixed-point, 3 rounds, seed set
     broadcast."""
-    from assemblagedb_spark.operators.components import personalized_pagerank
+    from assemblagedb_spark.operators.components import pagerank_rounds
 
     e = _cyclic_graph_edges(spark, sf_dir)
     seeds = (
@@ -3154,7 +3154,7 @@ def q_graph_ppr(spark: SparkSession, sf_dir: str) -> DataFrame:
         .filter(F.col("r_regionkey") < 3)
         .select(F.concat(F.lit("R"), F.col("r_regionkey")).alias("node_id"))
     )
-    return personalized_pagerank(e, seeds, rounds=3)
+    return pagerank_rounds(e, rounds=3, seeds=seeds)
 
 
 def _o_ppr(rounds: int, scale: int = 1_000_000, damping_pct: int = 85) -> str:
@@ -5488,8 +5488,8 @@ def q_graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     peeling (components.k_core_delta) — a degree table decremented only
     by each round's dead frontier's edges, so total join work is
     |E| + rounds·|V| instead of the simultaneous peel's rounds·|E|
-    (parity with k_core pinned on this exact graph,
-    tests/test_round3_ops.py; measured ~10% faster at sf0.1 and the
+    (parity with a plain-Python simultaneous peel pinned on this exact
+    graph, tests/test_round3_ops.py; measured ~10% faster at sf0.1 and the
     asymptotically better shape at corpus scale). Output is each core
     member with its in-core degree. The oracle unrolls 12 simultaneous
     peel rounds — peeling is monotone and both formulations reach the

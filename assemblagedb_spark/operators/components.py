@@ -2,43 +2,41 @@
 layer over the engine's edge relation (BASELINE.json north star: "GraphX for
 analytics queries", re-expressed as DataFrame rounds).
 
-Each round every node takes the min label in its closed neighborhood; after
-``rounds`` ≥ graph diameter the labels are exactly the per-component minimum
-node id (classic synchronous label propagation — the Pregel loop GraphX
-ships, as a join + aggregate per round).
+Each round every node takes the min label in its closed neighborhood; once
+no label changes the labels are exactly the per-component minimum node id
+(classic synchronous label propagation — the Pregel loop GraphX ships, as a
+join + aggregate per round).
 
 Scale design: per round the work is ONE |E| join + one |V| aggregate — no
 transitive closure is ever materialized, so hub nodes cause no row
 explosion. (Each round does pay its own exchanges: a checkpointed label
-relation exposes no partitioning for Catalyst to reuse — see the k_core
-pin note.) With ``rounds=None`` the loop probes convergence instead of
-trusting a diameter guess: each round's labels are checkpointed anyway, so
-the changed-label count is one cheap job over in-memory blocks, and the
-loop exits the first round nothing changes — exact components on any graph,
-bounded by ``max_rounds`` as a runaway guard. Fixed ``rounds`` remains for
-oracle replay (the DuckDB gate unrolls the same number of CTE rounds).
+relation exposes no partitioning for Catalyst to reuse — see the
+k_core_delta pin note.) The loop probes convergence instead of trusting a
+diameter guess: each round's labels are checkpointed anyway, the
+changed-label count rides that checkpoint job, and the loop exits the first
+round nothing changes — exact components on any graph, bounded by
+``_LP_MAX_ROUNDS`` as a runaway guard that raises instead of returning
+unconverged labels.
 """
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
+
+# label propagation's runaway guard: a component whose diameter reaches it
+# would come back under-merged, so exhausting it raises
+_LP_MAX_ROUNDS = 200
 
 
 def label_propagation_components(
     edges: DataFrame,
     *,
-    rounds: int | None,
-    max_rounds: int = 200,
-    probe_from: int = 2,
     copartition: bool = True,
 ) -> DataFrame:
-    """(node_id, component) labels from synchronous min-label propagation.
-
-    ``rounds``: fixed iteration count — component = min node id reachable
-    within that many hops, exact once ``rounds`` ≥ diameter (replayable by
-    an oracle that unrolls the same rounds). ``rounds=None``: iterate until
-    no label changes (exact components on any graph; stops after diameter+1
-    rounds, capped at ``max_rounds``).
+    """(node_id, component) labels from synchronous min-label propagation,
+    iterated until no label changes: exact components on any graph (stops
+    after diameter+1 rounds). Raises ``RuntimeError`` when the labels have
+    not stabilized within ``_LP_MAX_ROUNDS`` rounds.
 
     ``edges``: (parent_id, child_id), treated as undirected (components
     of the underlying undirected graph is the standard CC semantics).
@@ -67,77 +65,86 @@ def label_propagation_components(
         .distinct()
         .withColumn("component", F.col("node_id"))
     )
-    probe = rounds is None
-    n_rounds = max_rounds if probe else rounds
-    for r in range(n_rounds):
-        # labels flow src -> dst over the symmetrized relation
-        neigh = (
-            und.join(
-                labels.select(
-                    F.col("node_id").alias("src"), F.col("component").alias("nl")
-                ),
-                "src",
+    try:
+        for _ in range(_LP_MAX_ROUNDS):
+            # labels flow src -> dst over the symmetrized relation
+            neigh = (
+                und.join(
+                    labels.select(
+                        F.col("node_id").alias("src"),
+                        F.col("component").alias("nl"),
+                    ),
+                    "src",
+                )
+                .groupBy("dst")
+                .agg(F.min("nl").alias("nl"))
+                .withColumnRenamed("dst", "node_id")
             )
-            .groupBy("dst")
-            .agg(F.min("nl").alias("nl"))
-            .withColumnRenamed("dst", "node_id")
-        )
-        nxt = (
-            labels.join(neigh, "node_id", "left")
-            .select(
-                "node_id",
-                F.col("component").alias("prev"),
-                F.least(
-                    "component", F.coalesce("nl", F.col("component"))
-                ).alias("component"),
-            )
-        )
-        # labels virtually always change in the first rounds — skip those
-        # probe aggregates (exactness unaffected: propagation past
-        # convergence is the identity, the loop just exits at the next
-        # probe). ``probe_from`` lets callers that feed an already-
-        # contracted graph probe from round 0, where the first round
-        # usually IS the fixed point. The probe RIDES the checkpoint
-        # job via observe() (one job per round, not checkpoint + a
-        # second changed-count scan); an over-count under task retries
-        # only delays exit by a no-op round, an under-count cannot
-        # happen, so convergence stays exact.
-        do_probe = probe and r >= probe_from
-        if do_probe:
-            from pyspark.sql import Observation
-
+            # the changed-label probe RIDES the checkpoint job via
+            # observe() (one job per round, not checkpoint + a second
+            # changed-count scan), so probing every round costs no job;
+            # an over-count under task retries only delays exit by a
+            # no-op round (propagation past convergence is the
+            # identity), an under-count cannot happen, so convergence
+            # stays exact
             obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.sum(
-                    (F.col("component") != F.col("prev")).cast("long")
-                ).alias("changed"),
+            nxt = (
+                labels.join(neigh, "node_id", "left")
+                .select(
+                    "node_id",
+                    F.col("component").alias("prev"),
+                    F.least(
+                        "component", F.coalesce("nl", F.col("component"))
+                    ).alias("component"),
+                )
+                .observe(
+                    obs,
+                    F.sum(
+                        (F.col("component") != F.col("prev")).cast("long")
+                    ).alias("changed"),
+                )
+                .localCheckpoint(eager=True)  # one round computed once
             )
-        nxt = nxt.localCheckpoint(eager=True)  # one round computed once
-        labels = nxt.select("node_id", "component")
-        if do_probe and (obs.get["changed"] or 0) == 0:
-            break
-    und.unpersist()
-    return labels
+            labels = nxt.select("node_id", "component")
+            if (obs.get["changed"] or 0) == 0:
+                return labels
+    finally:
+        und.unpersist()
+    raise RuntimeError(
+        "label_propagation_components: labels did not stabilize within "
+        f"_LP_MAX_ROUNDS={_LP_MAX_ROUNDS} rounds; a component's diameter "
+        "exceeds the cap"
+    )
+
+
+# PageRank's integer fixed point: ranks are BIGINT multiples of
+# 1/_PR_SCALE, damped by _PR_DAMPING_PCT percent — the same two values the
+# DuckDB oracles render (harness._o_pagerank / _o_ppr defaults)
+_PR_SCALE = 1_000_000
+_PR_DAMPING_PCT = 85
 
 
 def pagerank_rounds(
     edges: DataFrame,
     *,
-    rounds: int | None,
-    scale: int = 1_000_000,
-    damping_pct: int = 85,
-    max_rounds: int = 200,
+    rounds: int,
+    seeds: DataFrame | None = None,
 ) -> DataFrame:
-    """Fixed-point integer PageRank: synchronous iterations with ranks held
-    as BIGINT multiples of 1/``scale`` and integer-division contributions —
-    every engine computes bit-identical ranks (no float summation order),
-    which is what makes the result oracle-comparable.
+    """Fixed-point integer PageRank: ``rounds`` synchronous iterations
+    with ranks held as BIGINT multiples of 1/``_PR_SCALE`` and
+    integer-division contributions — every engine computes bit-identical
+    ranks (no float summation order), which is what makes the result
+    oracle-comparable (the oracle unrolls the same rounds).
 
-    ``rounds``: fixed iteration count (oracle-replayable). ``rounds=None``:
-    iterate until the integer ranks reach their exact fixed point (no rank
-    changes between rounds — integer arithmetic converges exactly, unlike
-    float PageRank), capped at ``max_rounds``.
+    ``seeds``: the reset vector. ``None`` makes every node a seed —
+    global PageRank (initial rank ``_PR_SCALE`` and teleport term on
+    every node). A (node_id) frame gives personalized PageRank (random
+    walk with restart): initial rank and teleport mass land ONLY on the
+    seeds — the similarity ranking "which nodes does a walk from THESE
+    nodes keep reaching" (recommendation / related-documents queries
+    over the near-dup or citation graph). The seed set is broadcast
+    into the seed-flag join. One loop serves both, as GraphX runs both
+    as one Pregel program that differs only in its reset vector.
 
     Per round: one |E| join (contribution = rank div out-degree), one |V|
     aggregate — same shuffle shape as the Pregel PageRank GraphX ships.
@@ -161,12 +168,25 @@ def pagerank_rounds(
         .unionByName(e.select(F.col("dst").alias("node_id")))
         .distinct()
     )
+    # global PageRank carries no seed column: the constant flag folds
+    # away, so its rounds pin (node_id, rank) only
+    keep, is_seed = ["node_id"], F.lit(True)
+    if seeds is not None:
+        seed_flag = seeds.select(F.col("node_id")).distinct().withColumn(
+            "__is_seed", F.lit(True)
+        )
+        nodes = nodes.join(F.broadcast(seed_flag), "node_id", "left").select(
+            "node_id", F.coalesce("__is_seed", F.lit(False)).alias("is_seed")
+        )
+        keep, is_seed = ["node_id", "is_seed"], F.col("is_seed")
     outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = (100 - damping_pct) * scale // 100
-    ranks = nodes.withColumn("rank", F.lit(scale).cast("long"))
-    probe = rounds is None
-    n_rounds = max_rounds if probe else rounds
-    for _ in range(n_rounds):
+    base = (100 - _PR_DAMPING_PCT) * _PR_SCALE // 100
+    teleport = F.when(is_seed, F.lit(base)).otherwise(F.lit(0))
+    ranks = nodes.withColumn(
+        "rank",
+        F.when(is_seed, F.lit(_PR_SCALE)).otherwise(F.lit(0)).cast("long"),
+    )
+    for _ in range(rounds):
         contrib = (
             e.join(ranks.withColumnRenamed("node_id", "src"), "src")
             .join(outdeg, "src")
@@ -175,36 +195,22 @@ def pagerank_rounds(
             .agg(F.sum("c").alias("in_sum"))
             .withColumnRenamed("dst", "node_id")
         )
-        nxt = (
-            ranks.join(contrib, "node_id", "left")
+        ranks = (
+            ranks.select(*keep)
+            .join(contrib, "node_id", "left")
             .select(
-                "node_id",
-                F.col("rank").alias("prev"),
+                *keep,
                 (
-                    F.lit(base)
-                    + F.expr(f"({damping_pct} * coalesce(in_sum, 0)) div 100")
+                    teleport
+                    + F.expr(
+                        f"({_PR_DAMPING_PCT} * coalesce(in_sum, 0)) div 100"
+                    )
                 ).cast("long").alias("rank"),
             )
+            .localCheckpoint(eager=True)
         )
-        # the fixed-point probe rides the checkpoint job via observe()
-        # (one job per round; see label_propagation_components)
-        if probe:
-            from pyspark.sql import Observation
-
-            obs = Observation()
-            nxt = nxt.observe(
-                obs,
-                F.sum((F.col("rank") != F.col("prev")).cast("long")).alias(
-                    "changed"
-                ),
-            )
-        nxt = nxt.localCheckpoint(eager=True)
-        stable = probe and (obs.get["changed"] or 0) == 0
-        ranks = nxt.select("node_id", "rank")
-        if stable:
-            break
     e.unpersist()
-    return ranks
+    return ranks.select("node_id", "rank")
 
 
 def triangle_counts(edges: DataFrame) -> DataFrame:
@@ -229,6 +235,12 @@ def triangle_counts(edges: DataFrame) -> DataFrame:
     orientation-independent, so the result — and the oracle — are
     unchanged; the extra work is one degree aggregate + two joins to
     attach degrees before orienting, below the pinned edge relation.
+
+    Block lifetime: the oriented edges are pinned by an eager
+    ``localCheckpoint`` that the returned frame reads lazily, so they are
+    released only when that frame (and every frame derived from it) is
+    garbage-collected — a long-lived loop drops its references and runs
+    ``gc.collect()`` between calls (tools/scale_leg.py does).
     """
     und = edges.select(
         F.least("parent_id", "child_id").alias("u"),
@@ -327,13 +339,13 @@ def contraction_pass(rel: DataFrame) -> DataFrame:
     return rel.mapInPandas(_contract, schema=star_schema)
 
 
-def contracted_components(
-    edges: DataFrame,
-    *,
-    contraction_levels: int = 3,
-    fanin: int = 16,
-    max_rounds: int = 200,
-) -> DataFrame:
+# contracted_components' pass budget and per-level partition fan-in
+# (see the docstring: _CONTRACTION_FANIN bounds each task's union-find dict)
+_CONTRACTION_LEVELS = 3
+_CONTRACTION_FANIN = 16
+
+
+def contracted_components(edges: DataFrame) -> DataFrame:
     """Connected components via partition-local union-find contraction —
     the "local sequential step" of large-scale CC systems (Kiveris et al.,
     SoCC'14 §4 use the same idea to cut rounds) — finished by
@@ -347,13 +359,14 @@ def contracted_components(
     edges by a star over the same nodes
     preserves connectivity, so the union of stars across partitions has
     exactly the input's components — but every within-partition path is
-    now ≤2 hops. Each level feeds its stars to the next with ``fanin``×
-    fewer partitions (a shuffle-free ``coalesce``), so level 2 sees most
+    now ≤2 hops. Each level feeds its stars to the next with
+    ``_CONTRACTION_FANIN``× fewer partitions (a shuffle-free
+    ``coalesce``), so level 2 sees most
     of a component's stars in one task and collapses the cross-partition
     chains as well.
 
-    Phase 2: :func:`label_propagation_components` with ``rounds=None,
-    probe_from=0`` over the final star relation. On typical graphs the
+    Phase 2: :func:`label_propagation_components` over the final star
+    relation (it probes from round 0). On typical graphs the
     contraction has already converged and the loop exits at the first
     probe; on adversarial layouts (a chain whose every edge landed in a
     different partition) it simply runs the remaining rounds — exactness
@@ -368,9 +381,9 @@ def contracted_components(
     task's input and never leaves the executor — no driver collect, no
     broadcast, no assumption the graph fits anywhere whole. Arrow
     batches stream through the pass; only the node dict is resident.
-    ``fanin`` is therefore a memory knob, not just a round knob: a
-    level-k task sees at most ``fanin`` level-(k-1) partitions' star
-    rows, so its dict is bounded by ``fanin`` × nodes-per-partition
+    ``_CONTRACTION_FANIN`` is therefore a memory knob, not just a round
+    knob: a level-k task sees at most that many level-(k-1) partitions'
+    star rows, so its dict is bounded by it × nodes-per-partition
     (less when partitions share nodes, which is the whole point). Keep
     it modest on node-dense graphs and let the probed finisher absorb
     whatever the contraction didn't collapse — exactness never depends
@@ -403,115 +416,43 @@ def contracted_components(
     # fold went 32-wide) collapses fully instead of leaving
     # cross-partition chains to diameter-priced finisher rounds. The
     # localCheckpoint makes getNumPartitions a metadata read, and
-    # ``contraction_levels`` still caps the pass count at scale (a
+    # ``_CONTRACTION_LEVELS`` still caps the pass count at scale (a
     # 1000-partition corpus stops at 1000 → 63 → 4, each task's
     # union-find dict fanin-bounded exactly as before).
-    cur = fwd
-    if contraction_levels > 0:
-        cur = contraction_pass(cur).localCheckpoint(eager=True)
-        for _ in range(1, contraction_levels):
-            n_parts = cur.rdd.getNumPartitions()
-            if n_parts <= 1:
-                break
-            cur = contraction_pass(
-                cur.coalesce(max(1, n_parts // fanin))
-            ).localCheckpoint(eager=True)
-        # Exactness shortcut: mapInPandas is partition-preserving, so the
-        # checkpointed star relation has exactly its pass's input
-        # partition count — if that is ONE, the last union-find task saw
-        # every edge of the (contracted) graph and its per-task min-id
-        # roots ARE the global components. The finisher would symmetrize,
-        # persist and probe one propagation round just to confirm the
-        # fixed point; skip it and emit the stars as labels directly
-        # ((root, node) rows cover every node exactly once, roots
-        # included). The condition is checked mechanically at runtime —
-        # a multi-partition relation still takes the probed finisher, so
-        # exactness never rests on the contraction having converged.
-        # Assumption (ADVICE r9): node ids must order identically under
-        # Python's `<` (the union-find's min-root choice) and Spark's
-        # ordering (the finisher's F.min) for the two branches to agree —
-        # true for the integral/string ids every caller feeds; a float
-        # graph with NaN ids or mixed-type ids is outside the contract.
-        if cur.rdd.getNumPartitions() == 1:
-            return cur.select(
-                F.col("dst").alias("node_id"), F.col("src").alias("component")
-            )
+    cur = contraction_pass(fwd).localCheckpoint(eager=True)
+    for _ in range(1, _CONTRACTION_LEVELS):
+        n_parts = cur.rdd.getNumPartitions()
+        if n_parts <= 1:
+            break
+        cur = contraction_pass(
+            cur.coalesce(max(1, n_parts // _CONTRACTION_FANIN))
+        ).localCheckpoint(eager=True)
+    # Exactness shortcut: mapInPandas is partition-preserving, so the
+    # checkpointed star relation has exactly its pass's input
+    # partition count — if that is ONE, the last union-find task saw
+    # every edge of the (contracted) graph and its per-task min-id
+    # roots ARE the global components. The finisher would symmetrize,
+    # persist and probe one propagation round just to confirm the
+    # fixed point; skip it and emit the stars as labels directly
+    # ((root, node) rows cover every node exactly once, roots
+    # included). The condition is checked mechanically at runtime —
+    # a multi-partition relation still takes the probed finisher, so
+    # exactness never rests on the contraction having converged.
+    # Assumption (ADVICE r9): node ids must order identically under
+    # Python's `<` (the union-find's min-root choice) and Spark's
+    # ordering (the finisher's F.min) for the two branches to agree —
+    # true for the integral/string ids every caller feeds; a float
+    # graph with NaN ids or mixed-type ids is outside the contract.
+    if cur.rdd.getNumPartitions() == 1:
+        return cur.select(
+            F.col("dst").alias("node_id"), F.col("src").alias("component")
+        )
     return label_propagation_components(
         cur.select(
             F.col("src").alias("parent_id"), F.col("dst").alias("child_id")
         ),
-        rounds=None,
-        max_rounds=max_rounds,
-        probe_from=0,
         copartition=False,  # contracted relation is tiny by construction
     )
-
-
-def personalized_pagerank(
-    edges: DataFrame,
-    seeds: DataFrame,
-    *,
-    rounds: int,
-    scale: int = 1_000_000,
-    damping_pct: int = 85,
-) -> DataFrame:
-    """Random-walk-with-restart scores relative to a seed set: identical
-    loop to :func:`pagerank_rounds`, but the teleport mass lands ONLY on
-    the seeds — the similarity ranking "which nodes does a walk from THESE
-    nodes keep reaching" (recommendation / related-documents queries over
-    the near-dup or citation graph).
-
-    Integer fixed-point like the global variant (bit-identical on any
-    engine); ``seeds`` is a (node_id) frame, broadcast into the base-term
-    join. Fixed ``rounds`` for oracle replay. The edge cache is
-    hash-partitioned on ``src`` before persisting so each round's
-    contribution join reuses the cached layout (see
-    :func:`pagerank_rounds`).
-    """
-    parts = edges.sparkSession.sparkContext.defaultParallelism
-    e = edges.select(
-        F.col("parent_id").alias("src"), F.col("child_id").alias("dst")
-    ).distinct().repartition(parts, "src").persist()
-    nodes = (
-        e.select(F.col("src").alias("node_id"))
-        .unionByName(e.select(F.col("dst").alias("node_id")))
-        .distinct()
-    )
-    seed_flag = seeds.select(F.col("node_id")).distinct().withColumn(
-        "__is_seed", F.lit(True)
-    )
-    nodes = nodes.join(F.broadcast(seed_flag), "node_id", "left").select(
-        "node_id", F.coalesce("__is_seed", F.lit(False)).alias("is_seed")
-    )
-    outdeg = e.groupBy("src").agg(F.count(F.lit(1)).alias("outdeg"))
-    base = (100 - damping_pct) * scale // 100
-    base_col = F.when(F.col("is_seed"), F.lit(base)).otherwise(F.lit(0))
-    ranks = nodes.withColumn(
-        "rank", F.when(F.col("is_seed"), F.lit(scale)).otherwise(F.lit(0)).cast("long")
-    )
-    for _ in range(rounds):
-        contrib = (
-            e.join(ranks.withColumnRenamed("node_id", "src"), "src")
-            .join(outdeg, "src")
-            .select("dst", F.expr("rank div outdeg").alias("c"))
-            .groupBy("dst")
-            .agg(F.sum("c").alias("in_sum"))
-            .withColumnRenamed("dst", "node_id")
-        )
-        ranks = (
-            ranks.drop("rank")
-            .join(contrib, "node_id", "left")
-            .select(
-                "node_id", "is_seed",
-                (
-                    base_col
-                    + F.expr(f"({damping_pct} * coalesce(in_sum, 0)) div 100")
-                ).cast("long").alias("rank"),
-            )
-            .localCheckpoint(eager=True)
-        )
-    e.unpersist()
-    return ranks.select("node_id", "rank")
 
 
 def _symmetrized(edges: DataFrame) -> DataFrame:
@@ -539,13 +480,24 @@ def _symmetrized(edges: DataFrame) -> DataFrame:
     )
 
 
-def k_core(
+# rewrite-vs-tail pivot for k_core_delta: a rewrite round moves
+# O(n_alive) rows through one shuffle+sort+pin, a tail round touches
+# ≤ Σ edeg(frontier) candidate rows through broadcast joins (both pay
+# the flat edge scan) — switch to tail rounds once the candidate
+# fringe is this factor smaller than the alive table
+_KCORE_TAIL_FACTOR = 8
+# k_core_delta's runaway guard (each round peels at least one node, so |V|
+# rounds always suffice) and its broadcast cap in rows (~2M ids ≈ tens of
+# MB, safely under executor/driver broadcast limits)
+_KCORE_MAX_ROUNDS = 100
+_KCORE_BROADCAST_MAX_DEAD = 2_000_000
+
+
+def k_core_delta(
     edges: DataFrame,
     k: int,
     *,
-    max_rounds: int = 100,
     assume_distinct: bool = False,
-    broadcast_max_alive: int = 2_000_000,
 ) -> DataFrame:
     """The k-core of the undirected simple graph: iteratively peel every
     node whose current degree is below ``k`` (all at once per round) until
@@ -553,17 +505,10 @@ def k_core(
     members, with degree counted INSIDE the core — the densest-region
     extractor used for community seeds and hub detection (the GraphX
     ``connectedComponents``-family analytic Spark itself never shipped).
-
-    The per-round STATE is the alive-node set, not the edge set: the
-    symmetrized edge relation is checkpointed ONCE and stays static; each
-    round recomputes alive-restricted degrees with one semi-join + one
-    aggregate over it and shrinks the (much smaller) alive set. Rewriting
-    and re-pinning the full edge set every round — the naive formulation —
-    costs an |E| materialization per round and was measured 2× slower at
-    sf0.1. The loop convergence-probes (a round that drops nobody ends
-    it), bounded by ``max_rounds``; the SQL oracle unrolls a fixed round
-    count past measured convergence, which matches because peeling is
-    monotone (once stable, further rounds are identity).
+    The SQL oracle unrolls a fixed count of simultaneous peel rounds past
+    measured convergence, which matches because peeling is monotone (once
+    stable, further rounds are identity). Raises ``RuntimeError`` when a
+    dead frontier is still pending after ``_KCORE_MAX_ROUNDS`` rounds.
 
     ``assume_distinct``: the input rows are already distinct DIRECTED
     edges and no reverse duplicate exists (e.g. a typed hierarchy where
@@ -571,132 +516,28 @@ def k_core(
     3-way distinct, which is otherwise the single most expensive shuffle
     of the whole job (measured ~half the sf0.1 wall time).
 
-    ``broadcast_max_alive``: the alive set shrinks monotonically but
-    starts near |V|; for small ``k`` it may never get small. Each round
-    already counts the alive set exactly (the convergence probe), so the
-    semi-joins broadcast only while ``n_alive <= broadcast_max_alive``
-    (~2M longs ≈ tens of MB — safely under executor/driver broadcast
-    limits) and otherwise fall back to a shuffle semi-join that reuses
-    ``e``'s hash partitioning on ``u``. At 100 TB the early
-    nearly-full-V rounds shuffle; the long tail of shrinking rounds
-    broadcasts.
-    """
-    sym = _symmetrized(edges)
-    if not assume_distinct:
-        sym = sym.distinct()
-    # compact into defaultParallelism balanced blocks before pinning.
-    # What this buys (interleaved A/B at sf0.1): every round scans fewer,
-    # even-sized in-memory blocks than the raw input layout (~15% total).
-    # What it does NOT buy: Catalyst never reuses the hash partitioning —
-    # a groupBy/join over repartition(key).localCheckpoint still plans an
-    # Exchange (checkpointed blocks expose no partitioning; verified).
-    # Keyed, not round-robin: repartition(n) without a key adds a
-    # determinism sort to every map task, measured slower than the
-    # hash-keyed write.
-    parts = edges.sparkSession.sparkContext.defaultParallelism
-    e = sym.repartition(parts, "u").localCheckpoint(eager=True)
-    # round 0 runs on the full node set, so the plain degree aggregate IS
-    # the alive-restricted degree — no semi-joins, and the node set never
-    # needs its own distinct pass
-    alive = (
-        e.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        .filter(F.col("deg") >= k)
-        .select(F.col("u").alias("node_id"))
-        .localCheckpoint(eager=True)
-    )
-    n_alive = alive.count()
-
-    def _alive_restrict(edge_rel: DataFrame, alive_rel: DataFrame,
-                        n: int) -> DataFrame:
-        # a dead endpoint cannot revive (its row is dropped by the
-        # semi-join); broadcast only when the alive set is provably small
-        # (n is the exact count from the convergence probe), else let the
-        # planner run a shuffle semi-join
-        small = n <= broadcast_max_alive
-        v_side = alive_rel.select(F.col("node_id").alias("v"))
-        u_side = alive_rel.select(F.col("node_id").alias("u"))
-        if small:
-            v_side, u_side = F.broadcast(v_side), F.broadcast(u_side)
-        return (
-            edge_rel.join(v_side, "v", "left_semi")
-            .join(u_side, "u", "left_semi")
-        )
-
-    converged = False
-    for _ in range(max_rounds - 1):
-        # degree counting only edges whose far endpoint is still alive
-        deg = (
-            _alive_restrict(e, alive, n_alive)
-            .groupBy("u")
-            .agg(F.count(F.lit(1)).alias("deg"))
-        )
-        nxt = (
-            deg.filter(F.col("deg") >= k)
-            .select(F.col("u").alias("node_id"))
-            .localCheckpoint(eager=True)
-        )
-        m = nxt.count()
-        if m == n_alive:
-            converged = True
-            break
-        alive, n_alive = nxt, m
-    if not converged and n_alive > 0:
-        # an unconverged peel would silently return a superset of the
-        # core (some returned degrees below k) — fail loudly instead
-        raise RuntimeError(
-            f"k_core: peeling did not stabilize within max_rounds="
-            f"{max_rounds}; raise max_rounds (each round peels at least "
-            "one node, so |V| rounds always suffice)"
-        )
-    return (
-        _alive_restrict(e, alive, n_alive)
-        .groupBy("u")
-        .agg(F.count(F.lit(1)).cast("long").alias("degree"))
-        .withColumnRenamed("u", "node_id")
-    )
-
-
-# rewrite-vs-tail pivot for k_core_delta: a rewrite round moves
-# O(n_alive) rows through one shuffle+sort+pin, a tail round touches
-# ≤ Σ edeg(frontier) candidate rows through broadcast joins (both pay
-# the flat edge scan) — switch to tail rounds once the candidate
-# fringe is this factor smaller than the alive table
-_KCORE_TAIL_FACTOR = 8
-
-
-def k_core_delta(
-    edges: DataFrame,
-    k: int,
-    *,
-    max_rounds: int = 100,
-    assume_distinct: bool = False,
-    broadcast_max_dead: int = 2_000_000,
-) -> DataFrame:
-    """Frontier-delta formulation of :func:`k_core` (parity-tested
-    equivalent): instead of re-scanning the full alive-restricted edge
-    set every round, maintain a degree table and propagate only the
-    DELTAS — each round joins the edge set against the nodes that died
-    LAST round and decrements their surviving neighbors' degrees.
+    Frontier-delta formulation: instead of re-scanning the full
+    alive-restricted edge set every round (the simultaneous peel),
+    maintain a degree table and propagate only the DELTAS — each round
+    joins the edge set against the nodes that died LAST round and
+    decrements their surviving neighbors' degrees.
 
     Cost shape per round: |dead_frontier ⋈ E| (frontier-bounded, like
     BFS) plus an O(|V_alive|) degree-table rewrite — vs the simultaneous
     peel's O(|E_alive|) rescan. On graphs where peeling runs many rounds
     and each round kills few nodes (the long-tail regime at corpus
     scale, where |E| >> |V|), the delta form does asymptotically less
-    work; the gated query (`graph_kcore`) runs THIS formulation, with
-    :func:`k_core` kept as the simpler reference both are parity-pinned
-    against.
+    work. Tests pin it against a plain-Python simultaneous peel.
 
     A node dies exactly once (new deaths are computed among the alive
     set only), so each edge to a dead endpoint is decremented exactly
     once and the final degree equals the degree within the surviving
     core — identical output columns (node_id, degree).
 
-    ``broadcast_max_dead``: the convergence probe counts each round's
-    dead frontier exactly, so the frontier join broadcasts the dead
-    side only while ``n_dead <= broadcast_max_dead`` (~2M ids ≈ tens of
-    MB) and otherwise lets the planner shuffle — the same guarded
-    pattern as :func:`k_core`'s ``broadcast_max_alive``. Without the
+    ``_KCORE_BROADCAST_MAX_DEAD``: the convergence probe counts each
+    round's dead frontier exactly, so the frontier join broadcasts the
+    dead side only while ``n_dead <= _KCORE_BROADCAST_MAX_DEAD`` and
+    otherwise lets the planner shuffle. Without the
     hint the checkpointed edge blocks expose no partitioning, so the
     round-0 frontier join (the one big frontier: every initially-
     under-k node) re-shuffles the FULL edge relation; broadcasting the
@@ -726,7 +567,7 @@ def k_core_delta(
     count: every broadcast is gated on it BEFORE the round is planned
     (the same runtime-stats-guard pattern as
     :func:`~assemblagedb_spark.operators.traversal.descendants`), and
-    past ``broadcast_max_dead`` the loop simply consolidates with a
+    past ``_KCORE_BROADCAST_MAX_DEAD`` the loop simply consolidates with a
     rewrite round. Candidates already dead before a tail round are
     dropped from its pinned table: their accumulated decrements put
     them permanently under k at their death round, so the final ≥ k
@@ -737,16 +578,21 @@ def k_core_delta(
     sym = _symmetrized(edges)
     if not assume_distinct:
         sym = sym.distinct()
-    # balanced-block pin, keyed on v — same physical story as k_core's
-    # pin (balanced blocks help every round's scan; Catalyst cannot
-    # reuse the partitioning itself; keyed beats round-robin's
-    # determinism sort — all three A/B-measured at sf0.1)
+    # compact into defaultParallelism balanced blocks before pinning,
+    # keyed on v. Measured on the simultaneous peel this loop replaced,
+    # which pinned the same relation keyed on u. What this buys
+    # (interleaved A/B at sf0.1): every round scans fewer, even-sized
+    # in-memory blocks than the raw input layout (~15% total). What it
+    # does NOT buy: Catalyst never reuses the hash partitioning — a
+    # groupBy/join over repartition(key).localCheckpoint still plans an
+    # Exchange (checkpointed blocks expose no partitioning; verified).
+    # Keyed, not round-robin: repartition(n) without a key adds a
+    # determinism sort to every map task, measured slower than the
+    # hash-keyed write.
     parts = edges.sparkSession.sparkContext.defaultParallelism
 
     def _pin_e() -> DataFrame:
         return sym.repartition(parts, "v").localCheckpoint(eager=True)
-
-    from pyspark.sql import Observation
 
     dead0 = F.col("deg") < k
 
@@ -800,7 +646,7 @@ def k_core_delta(
     # rewrite; base.deg minus their sum is the current degree
     decs: list[DataFrame] = []
     dec_rows = 0
-    rounds_left = max_rounds
+    rounds_left = _KCORE_MAX_ROUNDS
 
     def _cum(rels: list[DataFrame], rows: int):
         cur = rels[0]
@@ -810,7 +656,7 @@ def k_core_delta(
         # total decrement rows were exactly counted, so the full-table
         # join can stream the pinned base blocks against a broadcast —
         # no |V| shuffle
-        return F.broadcast(cum) if rows <= broadcast_max_dead else cum
+        return F.broadcast(cum) if rows <= _KCORE_BROADCAST_MAX_DEAD else cum
 
     def _degrees():
         if not decs:
@@ -823,7 +669,10 @@ def k_core_delta(
 
     while n_front > 0 and rounds_left > 0:
         rounds_left -= 1
-        if bound <= broadcast_max_dead and bound * _KCORE_TAIL_FACTOR <= n_alive:
+        if (
+            bound <= _KCORE_BROADCAST_MAX_DEAD
+            and bound * _KCORE_TAIL_FACTOR <= n_alive
+        ):
             # TAIL round: the candidate table (nodes adjacent to the
             # frontier, ≤ bound rows by the probe's exact Σ edeg) is
             # built with broadcast joins only and pinned in ONE job —
@@ -915,7 +764,7 @@ def k_core_delta(
             # one O(|V_alive|) shuffle round, the optimal shape when
             # the fringe is of the table's order
             front_v = frontier.select(F.col("u").alias("v"))
-            if n_front <= broadcast_max_dead:
+            if n_front <= _KCORE_BROADCAST_MAX_DEAD:
                 front_v = F.broadcast(front_v)
             dec = (
                 e.join(front_v, "v")
@@ -944,11 +793,11 @@ def k_core_delta(
     if n_front > 0:
         # a pending dead frontier means surviving degrees were never
         # decremented for those deaths — returning would be silently
-        # wrong AND diverge from k_core; fail loudly (same contract)
+        # wrong (a superset core with sub-k degrees); fail loudly
         raise RuntimeError(
-            f"k_core_delta: peeling did not stabilize within max_rounds="
-            f"{max_rounds}; raise max_rounds (each round peels at least "
-            "one node, so |V| rounds always suffice)"
+            "k_core_delta: peeling did not stabilize within "
+            f"_KCORE_MAX_ROUNDS={_KCORE_MAX_ROUNDS} rounds (each round "
+            "peels at least one node, so |V| rounds always suffice)"
         )
     return (
         _degrees()

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 import string
 
-from hypothesis import HealthCheck, given, settings
+from hypothesis import HealthCheck, example, given, settings
 from hypothesis import strategies as st
 
 from assemblagedb_spark.functions.core import index_text, trim_for_search
@@ -156,9 +156,9 @@ def test_arrow_grams_equal_driver_grams(spark, texts):
     )
 )
 def test_label_propagation_matches_union_find(spark, pairs):
-    """Bounded label propagation with rounds >= diameter equals exact
-    union-find components on arbitrary random graphs (cycles, self-loops,
-    parallel edges included)."""
+    """Convergence-probed label propagation equals exact union-find
+    components on arbitrary random graphs (cycles, self-loops, parallel
+    edges included)."""
     from assemblagedb_spark.operators.components import (
         label_propagation_components,
     )
@@ -167,10 +167,9 @@ def test_label_propagation_matches_union_find(spark, pairs):
         [(f"n{a:02d}", f"n{b:02d}", 0) for a, b in pairs],
         "parent_id string, child_id string, idx int",
     )
-    # rounds = node count bounds any diameter
     got = {
         r["node_id"]: r["component"]
-        for r in label_propagation_components(edges, rounds=15).collect()
+        for r in label_propagation_components(edges).collect()
     }
 
     parent: dict[str, str] = {}
@@ -201,28 +200,40 @@ def test_label_propagation_matches_union_find(spark, pairs):
         st.tuples(st.integers(0, 9), st.integers(0, 9)),
         min_size=1,
         max_size=25,
-    ).map(lambda ps: sorted(set(ps)))
+    ).map(lambda ps: sorted(set(ps))),
+    st.one_of(st.none(), st.sets(st.integers(0, 11))),
 )
-def test_pagerank_rounds_match_python_reference(spark, pairs):
+@example(pairs=[(0, 1), (0, 2), (1, 2), (2, 0)], seed_ids=None)
+def test_pagerank_rounds_match_python_reference(spark, pairs, seed_ids):
     """Integer fixed-point PageRank equals a pure-python replay of the same
-    arithmetic on arbitrary directed graphs."""
+    arithmetic on arbitrary directed graphs — global (``seeds=None``) and
+    personalized to a random seed subset (ids 10-11 never occur in the
+    graph); seeding every node equals ``seeds=None``."""
     from assemblagedb_spark.operators.components import pagerank_rounds
 
     edges = spark.createDataFrame(
         [(f"n{a}", f"n{b}", 0) for a, b in pairs],
         "parent_id string, child_id string, idx int",
     )
-    got = {
-        r["node_id"]: r["rank"]
-        for r in pagerank_rounds(edges, rounds=3).collect()
-    }
+
+    def ranks(ids):
+        seeds = None if ids is None else spark.createDataFrame(
+            [(f"n{i}",) for i in sorted(ids)], "node_id string"
+        )
+        return {
+            r["node_id"]: r["rank"]
+            for r in pagerank_rounds(edges, rounds=3, seeds=seeds).collect()
+        }
+
+    got = ranks(seed_ids)
 
     scale, damping = 1_000_000, 85
     nodes = {f"n{a}" for a, b in pairs} | {f"n{b}" for a, b in pairs}
+    seeded = nodes if seed_ids is None else {f"n{i}" for i in seed_ids}
     out: dict[str, list[str]] = {}
     for a, b in pairs:
         out.setdefault(f"n{a}", []).append(f"n{b}")
-    rank = {n: scale for n in nodes}
+    rank = {n: scale if n in seeded else 0 for n in nodes}
     base = (100 - damping) * scale // 100
     for _ in range(3):
         in_sum = {n: 0 for n in nodes}
@@ -230,8 +241,13 @@ def test_pagerank_rounds_match_python_reference(spark, pairs):
             c = rank[src] // len(dsts)
             for d in dsts:
                 in_sum[d] += c
-        rank = {n: base + (damping * in_sum[n]) // 100 for n in nodes}
+        rank = {
+            n: (base if n in seeded else 0) + (damping * in_sum[n]) // 100
+            for n in nodes
+        }
     assert got == rank
+    if seed_ids is None:
+        assert ranks({int(n[1:]) for n in nodes}) == got
 
 
 def test_hyperplane_sketch_arrow_equals_jvm(spark):

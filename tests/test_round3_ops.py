@@ -209,7 +209,7 @@ def test_hll_rollup_merge_equals_direct(spark):
 
 
 def test_k_core_peels_to_stable_core(spark):
-    from assemblagedb_spark.operators.components import k_core
+    from assemblagedb_spark.operators.components import k_core_delta
 
     # triangle 1-2-3 (the 2-core) + a tail 3-4-5-6 that peels away one
     # node per round (exercises multi-round convergence), + isolated pair
@@ -217,34 +217,29 @@ def test_k_core_peels_to_stable_core(spark):
         [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11)],
         "parent_id long, child_id long",
     )
-    out = {r["node_id"]: r["degree"] for r in k_core(e, k=2).collect()}
+    out = {r["node_id"]: r["degree"] for r in k_core_delta(e, k=2).collect()}
     assert out == {1: 2, 2: 2, 3: 2}
     # k=1 keeps everything with at least one neighbor
-    k1 = {r["node_id"] for r in k_core(e, k=1).collect()}
+    k1 = {r["node_id"] for r in k_core_delta(e, k=1).collect()}
     assert k1 == {1, 2, 3, 4, 5, 6, 10, 11}
     # k high enough empties the graph
-    assert k_core(e, k=3).count() == 0
+    assert k_core_delta(e, k=3).count() == 0
 
 
-def test_k_core_shuffle_semijoin_fallback_parity(spark):
-    # broadcast_max_alive=0 forces the over-threshold branch (shuffle
-    # semi-joins instead of broadcasting the alive set — the path a 100 TB
-    # small-k run takes, ADVICE r3): identical core, and no broadcast of
-    # the alive relation in the final plan
-    from assemblagedb_spark.operators.components import k_core
-    from assemblagedb_spark.plans.explain import formatted_plan
-
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11),
-         (6, 4), (11, 12), (12, 10)],
-        "parent_id long, child_id long",
-    )
-    for k in (1, 2, 3):
-        bc = sorted(map(tuple, k_core(e, k=k).collect()))
-        sh_df = k_core(e, k=k, broadcast_max_alive=0)
-        assert bc == sorted(map(tuple, sh_df.collect()))
-    plan = formatted_plan(k_core(e, k=2, broadcast_max_alive=0))
-    assert "BroadcastHashJoin" not in plan
+def _py_k_core(rows, k):
+    """Plain-Python simultaneous peel: sorted (node, in-core degree) of
+    the k-core of the undirected simple graph over ``rows``."""
+    adj: dict = {}
+    for a, b in rows:
+        if a != b:
+            adj.setdefault(a, set()).add(b)
+            adj.setdefault(b, set()).add(a)
+    alive = set(adj)
+    while True:
+        dead = {n for n in alive if len(adj[n] & alive) < k}
+        if not dead:
+            return sorted((n, len(adj[n] & alive)) for n in alive)
+        alive -= dead
 
 
 def test_k_core_delta_parity(spark, sf_dir):
@@ -252,22 +247,19 @@ def test_k_core_delta_parity(spark, sf_dir):
     # every (graph, k): the hand-built multi-round fixture, k sweep, AND
     # the real harness graph the gate runs on
     from assemblagedb_spark.harness import _shared_graph_edges
-    from assemblagedb_spark.operators.components import k_core, k_core_delta
+    from assemblagedb_spark.operators.components import k_core_delta
 
-    e = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11),
-         (6, 4), (11, 12), (12, 10)],
-        "parent_id long, child_id long",
-    )
+    rows = [(1, 2), (2, 3), (3, 1), (3, 4), (4, 5), (5, 6), (10, 11),
+            (6, 4), (11, 12), (12, 10)]
+    e = spark.createDataFrame(rows, "parent_id long, child_id long")
     for k in (1, 2, 3):
-        a = sorted(map(tuple, k_core(e, k=k).collect()))
         b = sorted(map(tuple, k_core_delta(e, k=k).collect()))
-        assert a == b, f"delta parity broken at k={k}"
+        assert _py_k_core(rows, k) == b, f"delta parity broken at k={k}"
 
     g = _shared_graph_edges(spark, sf_dir)
-    a = sorted(map(tuple, k_core(g, k=2, assume_distinct=True).collect()))
+    g_rows = [(r["parent_id"], r["child_id"]) for r in g.collect()]
     b = sorted(map(tuple, k_core_delta(g, k=2, assume_distinct=True).collect()))
-    assert a == b
+    assert b and _py_k_core(g_rows, 2) == b
 
     # seeded random graphs across density regimes — long peel cascades,
     # isolated nodes, and multi-round partial deaths all occur here
@@ -278,18 +270,17 @@ def test_k_core_delta_parity(spark, sf_dir):
         rows = [(rng.randrange(n), rng.randrange(n)) for _ in range(m)]
         re_ = spark.createDataFrame(rows, "parent_id long, child_id long")
         for k in (2, 3):
-            a = sorted(map(tuple, k_core(re_, k=k).collect()))
             b = sorted(map(tuple, k_core_delta(re_, k=k).collect()))
-            assert a == b, f"seed={seed} k={k}"
+            assert _py_k_core(rows, k) == b, f"seed={seed} k={k}"
 
 
 def test_k_core_delta_mode_parity(spark, monkeypatch):
     # the round-10 hybrid picks rewrite vs tail rounds from runtime
-    # stats (_KCORE_TAIL_FACTOR pivot; broadcast_max_dead cap). Force
-    # each mode across the full seeded sweep: factor so large the tail
-    # never engages (pure rewrite — the old shape), factor 0 with a big
-    # cap (tail whenever the broadcast fits), and broadcast_max_dead=0
-    # (every broadcast gate off → pure rewrite with shuffle joins).
+    # stats (_KCORE_TAIL_FACTOR pivot; _KCORE_BROADCAST_MAX_DEAD cap).
+    # Force each mode across the full seeded sweep: factor so large the
+    # tail never engages (pure rewrite — the old shape), factor 0 with a
+    # big cap (tail whenever the broadcast fits), and a zero cap (every
+    # broadcast gate off → pure rewrite with shuffle joins).
     # All three must emit identical cores.
     import random
 
@@ -304,28 +295,31 @@ def test_k_core_delta_mode_parity(spark, monkeypatch):
             rewrite_only = sorted(map(tuple, C.k_core_delta(e, k=k).collect()))
             monkeypatch.setattr(C, "_KCORE_TAIL_FACTOR", 0)
             tail_always = sorted(map(tuple, C.k_core_delta(e, k=k).collect()))
-            no_broadcast = sorted(
-                map(tuple, C.k_core_delta(e, k=k, broadcast_max_dead=0).collect())
-            )
+            with monkeypatch.context() as mp:
+                mp.setattr(C, "_KCORE_BROADCAST_MAX_DEAD", 0)
+                no_broadcast = sorted(
+                    map(tuple, C.k_core_delta(e, k=k).collect())
+                )
             assert rewrite_only == tail_always, f"seed={seed} k={k}"
             assert rewrite_only == no_broadcast, f"seed={seed} k={k}"
 
 
-def test_k_core_raises_on_nonconvergence(spark):
+def test_k_core_raises_on_nonconvergence(spark, monkeypatch):
     # an exhausted round budget with peeling still in flight must raise,
     # not silently return a superset core with sub-k degrees
     import pytest as _pytest
 
-    from assemblagedb_spark.operators.components import k_core, k_core_delta
+    from assemblagedb_spark.operators import components as C
 
     e = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
     )
-    for fn in (k_core, k_core_delta):
-        with _pytest.raises(RuntimeError, match="did not stabilize"):
-            fn(e, k=2, max_rounds=2)
-        # with budget, the acyclic path peels fully to an empty core
-        assert fn(e, k=2, max_rounds=50).count() == 0
+    monkeypatch.setattr(C, "_KCORE_MAX_ROUNDS", 2)
+    with _pytest.raises(RuntimeError, match="did not stabilize"):
+        C.k_core_delta(e, k=2)
+    # with budget, the acyclic path peels fully to an empty core
+    monkeypatch.setattr(C, "_KCORE_MAX_ROUNDS", 50)
+    assert C.k_core_delta(e, k=2).count() == 0
 
 
 def test_weighted_sample_per_row_rates(spark):

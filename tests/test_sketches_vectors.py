@@ -393,7 +393,8 @@ def test_bloom_no_false_negatives_and_prefilter_exact(spark):
     assert refined == exact
 
 
-def test_contracted_components_parity(spark):
+def test_contracted_components_parity(spark, monkeypatch):
+    from assemblagedb_spark.operators import components as C
     from assemblagedb_spark.operators.components import (
         contracted_components,
         label_propagation_components,
@@ -410,7 +411,7 @@ def test_contracted_components_parity(spark):
                      for r in contracted_components(arranged).collect())
         ref = sorted((r["node_id"], r["component"])
                      for r in label_propagation_components(
-                         arranged, rounds=None, max_rounds=200).collect())
+                         arranged).collect())
         assert got == ref
     assert {c for _, c in got} == {0, 500, 900, 950}
     assert (950, 950) in got
@@ -421,9 +422,11 @@ def test_contracted_components_parity(spark):
     chain = spark.createDataFrame(
         [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
     ).repartition(12)
-    got = sorted((r["node_id"], r["component"])
-                 for r in contracted_components(
-                     chain, contraction_levels=1, fanin=1).collect())
+    with monkeypatch.context() as mp:
+        mp.setattr(C, "_CONTRACTION_LEVELS", 1)
+        mp.setattr(C, "_CONTRACTION_FANIN", 1)
+        got = sorted((r["node_id"], r["component"])
+                     for r in contracted_components(chain).collect())
     assert got == [(i, 0) for i in range(13)]
 
     # string node ids (the db layer's uuid graphs)
@@ -449,8 +452,7 @@ def test_contracted_components_parity(spark):
     got = sorted((r["node_id"], r["component"])
                  for r in contracted_components(ne).collect())
     ref = sorted((r["node_id"], r["component"])
-                 for r in label_propagation_components(
-                     ne, rounds=None, max_rounds=50).collect()
+                 for r in label_propagation_components(ne).collect()
                  if r["node_id"] is not None)
     assert got == ref == [(1, 1), (2, 1), (5, 5), (7, 7), (8, 7)]
 
@@ -467,8 +469,7 @@ def test_contracted_components_parity(spark):
         got = sorted((r["node_id"], r["component"])
                      for r in contracted_components(e).collect())
         ref = sorted((r["node_id"], r["component"])
-                     for r in label_propagation_components(
-                         e, rounds=None, max_rounds=200).collect())
+                     for r in label_propagation_components(e).collect())
         assert got == ref, f"seed={seed}"
         parent = {}
 
@@ -489,7 +490,7 @@ def test_contracted_components_parity(spark):
 
 
 def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
-    from assemblagedb_spark.operators.components import personalized_pagerank
+    from assemblagedb_spark.operators.components import pagerank_rounds
 
     # two disjoint cycles; seed only the first
     e = spark.createDataFrame(
@@ -498,7 +499,7 @@ def test_personalized_pagerank_mass_concentrates_near_seeds(spark):
     )
     seeds = spark.createDataFrame([(1,)], "node_id long")
     r = {row["node_id"]: row["rank"]
-         for row in personalized_pagerank(e, seeds, rounds=6).collect()}
+         for row in pagerank_rounds(e, rounds=6, seeds=seeds).collect()}
     # unreachable component gets zero mass; seed's component is positive
     assert r[10] == r[11] == r[12] == 0
     assert r[1] > 0 and r[2] > 0 and r[3] > 0
@@ -730,5 +731,7 @@ def test_contracted_components_single_partition_skips_finisher(spark, monkeypatc
         [(i, i + 1) for i in range(12)], "parent_id long, child_id long"
     ).repartition(12)
     import pytest as _pytest
+    monkeypatch.setattr(C, "_CONTRACTION_LEVELS", 1)
+    monkeypatch.setattr(C, "_CONTRACTION_FANIN", 1)
     with _pytest.raises(AssertionError, match="finisher invoked"):
-        C.contracted_components(chain, contraction_levels=1, fanin=1)
+        C.contracted_components(chain)
